@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark entry: runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -66,18 +65,9 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // wide plans (pivot/rollup outputs, and formerly the exploded
-      // sketch-signature aggregates — now native per-row expressions)
-      // stay inside whole-stage codegen (default maxFields=100)
-      .config("spark.sql.codegen.maxFields", "256")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def exec(name: String): Double = {
       val t0 = System.nanoTime()
@@ -241,7 +231,7 @@ object Bench {
     val quietPath = sys.env.getOrElse("BENCH_QUIET", "bench_quiet.json")
     val out = sys.env.getOrElse("BENCH_OUT", "bench_out.json")
     println(stdoutLine(med, total, sfDir, reps, noise, degraded,
-      quiet = if (degraded) readQuiet(quietPath, sfDir, cpus) else None,
+      quiet = if (degraded) readQuiet(quietPath, sfDir, cpus.toString) else None,
       fullMap = out))
     val dg = if (degraded) ""","degraded":true""" else ""
     // queries_min (r21, additive BENCH_OUT-only field): per-entry MIN

@@ -10,13 +10,12 @@ import org.apache.spark.sql.SparkSessionExtensions
   * }}}
   *
   * so `cosine_similarity` / `dot_product` / `poly_hash` resolve in SQL and
-  * `expr(...)` without per-session `register(spark)` calls — the deployment
-  * shape a shared cluster uses (one config line, every notebook/job gets
-  * the functions). The function list itself is single-sourced in
-  * [[GraftFunctions.all]], shared with [[GraftFunctions.registerAll]] and
-  * the expression objects' own `register` methods for embedded use; all
-  * routes construct the same expression nodes, so plans and codegen are
-  * identical either way. */
+  * `expr(...)` without a per-session [[GraftFunctions.registerAll]] call —
+  * the deployment shape a shared cluster uses (one config line, every
+  * notebook/job gets the functions). The function list itself is
+  * single-sourced in [[GraftFunctions.all]], which `registerAll` also
+  * registers for embedded use; both routes construct the same expression
+  * nodes, so plans and codegen are identical either way. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftFunctions, Tables}
 import graft.RunScope.ScratchCacheOps
 
 /** Behavioral event analytics — the funnel and cohort-retention queries a
@@ -906,7 +906,7 @@ object Behavior {
       .groupBy("partkey").agg(count(lit(1)).as("n"))
     // native pair expansion — the interpreted flatten/transform/slice
     // chain measured ~35% of this entry at 25× (r22 §12)
-    graft.functions.OrderedPairs.register(items.sparkSession)
+    GraftFunctions.registerAll(items.sparkSession)
     val pairs = baskets
       .filter(size(col("parts")) >= 2)
       .select(explode(expr("ordered_pairs(parts)")).as("p"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftFunctions, Tables}
 
 /** Exact grouped quantiles (median / p95 / p99 of event values per type) —
   * the distribution-profiling aggregate an analytics engine needs beyond
@@ -667,7 +667,7 @@ object Quantiles {
     * measured negative): `.scratchCache()` on the joined (priority,
     * delay) frame — one join execution feeding both consumers — was
     * tried and measured SLOWER in an in-JVM alternated A/B
-    * (CcAbProfile, min estimator): 5× organic 2.55 s uncached vs
+    * (CcAbProfile @ 2e9473a, min estimator): 5× organic 2.55 s uncached vs
     * 2.94 s cached, 25× 6.73 s vs 7.65 s, and 17 vs 21 driver jobs —
     * the consistent sign at both scales. The codegen'd scan+join of two
     * pruned fact columns is cheaper to recompute (even ~3×: range-
@@ -727,7 +727,7 @@ object Quantiles {
     * and the crossing compare is long-vs-double (exact below 2⁵³), so
     * both engines pick the identical row. */
   def weightedLengthQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     weightedQuantilesFrom(
       Tables.spread(Tables.documents(spark, dir))
         .select(col("lang"),

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -210,17 +209,4 @@ case class ArgmaxCell(ed: Expression, ids: Expression, cents: Expression)
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): ArgmaxCell =
     copy(ed = newFirst, ids = newSecond, cents = newThird)
-}
-
-object ArgmaxCell {
-  /** Idempotently register `argmax_cell(ed, ids, centroids)` on the
-    * session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_cell",
-      { args: Seq[Expression] =>
-        require(args.length == 3, "argmax_cell expects 3 arguments")
-        ArgmaxCell(args.head, args(1), args(2))
-      },
-      "scala_udf")
 }

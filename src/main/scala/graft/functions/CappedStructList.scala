@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
@@ -134,11 +133,6 @@ object CappedStructList {
   /** Aggregation state: `hot` = the group exceeded the cap (contents
     * discarded, result NULL); otherwise the collected rows so far. */
   final class Buf(var hot: Boolean, val items: mutable.ArrayBuffer[UnsafeRow])
-
-  /** Idempotently register `capped_list(struct, cap)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "capped_list", builder, "scala_udf")
 
   private[graft] val builder: Seq[Expression] => Expression = { args =>
     require(args.length == 2, "capped_list expects (struct column, cap)")

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,14 +75,4 @@ object CharEntropy {
     }
     h
   }
-
-  /** Idempotently register `char_entropy(s)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "char_entropy expects 1 argument")
-        CharEntropy(args.head)
-      },
-      "scala_udf")
 }

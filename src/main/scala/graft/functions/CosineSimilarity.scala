@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -145,19 +144,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Idempotently register `cosine_similarity(a, b)` on the session so it
-    * is callable from `expr(...)` / SQL. Uses the session's function
-    * registry directly — no SparkSessionExtensions wiring needed, so it
-    * works on any session the driver hands us. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "cosine_similarity expects 2 arguments")
-        CosineSimilarity(args.head, args(1))
-      },
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -99,14 +98,4 @@ object DhashBits {
     }
     s
   }
-
-  /** Idempotently register `dhash_bits(arr, bits)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dhash_bits",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "dhash_bits expects 2 arguments")
-        DhashBits(args.head, args(1))
-      },
-      "scala_udf")
 }

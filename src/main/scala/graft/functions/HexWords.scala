@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -142,14 +141,4 @@ object HexWords {
     }
     new GenericArrayData(out)
   }
-
-  /** Idempotently register `hex_words(h, width, n, signed)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hex_words",
-      { args: Seq[Expression] =>
-        require(args.length == 4, "hex_words expects 4 arguments")
-        HexWords(args.head, args(1), args(2), args(3))
-      },
-      "scala_udf")
 }

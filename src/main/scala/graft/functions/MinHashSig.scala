@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -100,14 +99,4 @@ object MinHashSig {
     }
     new GenericArrayData(mins)
   }
-
-  /** Idempotently register `minhash_sig(shingles, k)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "minhash_sig expects 2 arguments")
-        MinHashSig(args.head, args(1))
-      },
-      "scala_udf")
 }

@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -138,13 +137,6 @@ case class MisraGries(
 }
 
 object MisraGries {
-
-  /** Idempotently register `misra_gries(col, k)` on the session (the
-    * analyzer wraps the returned AggregateFunction into an
-    * AggregateExpression). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries", builder, "scala_udf")
 
   private[graft] val builder: Seq[Expression] => Expression = { args =>
     require(args.length == 2, "misra_gries expects (column, k)")

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,14 +94,4 @@ object MovingEnergy {
     }
     new GenericArrayData(out)
   }
-
-  /** Idempotently register `moving_energy(sm, window, frames)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "moving_energy",
-      { args: Seq[Expression] =>
-        require(args.length == 3, "moving_energy expects 3 arguments")
-        MovingEnergy(args.head, args(1), args(2))
-      },
-      "scala_udf")
 }

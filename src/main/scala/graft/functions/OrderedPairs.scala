@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,14 +93,4 @@ object OrderedPairs {
     }
     new GenericArrayData(out)
   }
-
-  /** Idempotently register `ordered_pairs(xs)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ordered_pairs",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "ordered_pairs expects 1 argument")
-        OrderedPairs(args.head)
-      },
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -56,14 +55,4 @@ object PolyHash {
     }
     acc
   }
-
-  /** Idempotently register `poly_hash(s)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "poly_hash expects 1 argument")
-        PolyHash(args.head)
-      },
-      "scala_udf")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -110,14 +109,4 @@ object RegexCount {
     * by the registry's literal-pattern call sites). */
   def countUncached(s: UTF8String, regex: UTF8String): Int =
     count(s, Pattern.compile(regex.toString))
-
-  /** Idempotently register `regex_count(s, re)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "regex_count",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "regex_count expects 2 arguments")
-        RegexCount(args.head, args(1))
-      },
-      "scala_udf")
 }

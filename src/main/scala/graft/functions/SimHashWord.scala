@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -116,14 +115,4 @@ object SimHashWord {
     }
     sim
   }
-
-  /** Idempotently register `simhash_word(shingles, word)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_word",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "simhash_word expects 2 arguments")
-        SimHashWord(args.head, args(1))
-      },
-      "scala_udf")
 }

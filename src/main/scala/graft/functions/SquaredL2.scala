@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -126,16 +125,4 @@ case class SquaredL2(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SquaredL2 =
     copy(left = newLeft, right = newRight)
-}
-
-object SquaredL2 {
-  /** Idempotently register `squared_l2(a, b)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "squared_l2",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "squared_l2 expects 2 arguments")
-        SquaredL2(args.head, args(1))
-      },
-      "scala_udf")
 }

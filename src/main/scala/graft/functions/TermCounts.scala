@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.{Map => JMap, TreeMap => JTreeMap}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -90,14 +89,4 @@ object TermCounts {
     }
     new GenericArrayData(out)
   }
-
-  /** Idempotently register `term_counts(arr)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "term_counts",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "term_counts expects 1 argument")
-        TermCounts(args.head)
-      },
-      "scala_udf")
 }

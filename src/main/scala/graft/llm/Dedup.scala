@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftFunctions, Tables}
 import graft.RunScope.ScratchCacheOps
 
 /** Near-duplicate detection over the `documents` corpus — the dedup family
@@ -100,8 +100,7 @@ object Dedup {
     * keeps the collision probability negligible below ~10⁹ distinct
     * shingles per corpus. */
   private[llm] def ngramJaccardPairsFrom(sh: DataFrame, maxDf: Int): DataFrame = {
-    graft.functions.CappedStructList.register(sh.sparkSession)
-    graft.functions.OrderedPairs.register(sh.sparkSession)
+    GraftFunctions.registerAll(sh.sparkSession)
     // Shingles are hashed INSIDE the array and |shingles| rides along
     // through the explode: the shuffled stream is (doc_id, n, hash) —
     // fixed-width longs, no string leaves the scan stage, and no later
@@ -205,8 +204,7 @@ object Dedup {
     * see [[containmentDedup]] for semantics and the scale story. */
   private[llm] def containmentPairsFrom(sh: DataFrame, maxDf: Int,
       minC: Double): DataFrame = {
-    graft.functions.CappedStructList.register(sh.sparkSession)
-    graft.functions.OrderedPairs.register(sh.sparkSession)
+    GraftFunctions.registerAll(sh.sparkSession)
     // one-pass capped posting build — see ngramJaccardPairsFrom (r22)
     val ex = sh.select(col("doc_id"), size(col("shingles")).as("n"),
         explode(expr("transform(shingles, s -> xxhash64(s))")).as("s"))
@@ -290,7 +288,7 @@ object Dedup {
     * [[minhashDedup]] and [[Decontaminate.decontaminateFuzzy]] so "same
     * bucket" means the same thing in both audits. */
   private[graft] def minhashBands(sh: DataFrame): DataFrame = {
-    graft.functions.MinHashSig.register(sh.sparkSession)
+    GraftFunctions.registerAll(sh.sparkSession)
     // non-shingle input columns pass through (the chunksFrameFrom
     // contract): Decontaminate's fuzzy audit carries its split column
     // here instead of joining it back onto the 16-rows-per-doc band
@@ -534,7 +532,7 @@ object Dedup {
     * [[graft.streaming.DocStream]], which needs exactly this per-row
     * shape to fingerprint documents as they arrive. */
   private[graft] def simhashFingerprints(shingled: DataFrame): DataFrame = {
-    graft.functions.SimHashWord.register(shingled.sparkSession)
+    GraftFunctions.registerAll(shingled.sparkSession)
     shingled.select(col("doc_id"),
       expr("simhash_word(shingles, 0)").as("simhash"))
   }
@@ -653,7 +651,7 @@ object Dedup {
     simhashDedupWideFrom(withShingles(spark, dir))
 
   private[graft] def simhashDedupWideFrom(shingled: DataFrame): DataFrame = {
-    graft.functions.SimHashWord.register(shingled.sparkSession)
+    GraftFunctions.registerAll(shingled.sparkSession)
     val sh = shingled.select(col("doc_id"),
       expr("simhash_word(shingles, 0)").as("sim1"),
       expr("simhash_word(shingles, 1)").as("sim2")).scratchCache()
@@ -1211,8 +1209,7 @@ object Dedup {
     * emitted pairs to carry the same jaccard the full kernel computes
     * (the equivalence [[dedupIncremental]]'s oracle asserts). */
   private[llm] def ngramJaccardPairsTouchingNew(sh: DataFrame, maxDf: Int): DataFrame = {
-    graft.functions.CappedStructList.register(sh.sparkSession)
-    graft.functions.OrderedPairs.register(sh.sparkSession)
+    GraftFunctions.registerAll(sh.sparkSession)
     // one-pass capped posting build — see ngramJaccardPairsFrom (r22).
     // The r21 sizedSpread+scratchCache existed for the two-read shape
     // (df head count + posting build, where the A/B measured −11% on
@@ -1364,7 +1361,7 @@ object Dedup {
     val counts = bySh.select(explode(col("srcs")).as("source"))
       .groupBy("source").agg(count(lit(1)).as("n"))
     // native pair expansion — see ngramJaccardPairsFrom (r22 §12)
-    graft.functions.OrderedPairs.register(spark)
+    GraftFunctions.registerAll(spark)
     val pairs = bySh
       .filter(size(col("srcs")) >= 2)
       .select(explode(expr("ordered_pairs(srcs)")).as("p"))

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftFunctions, Tables}
 
 /** Multimodal-column plumbing: opaque `binary` payloads with typed
   * metadata, decoded/feature-extracted in batched partition passes
@@ -410,7 +410,7 @@ object Multimodal {
     * caught at the 25× rehearsal — one task carried the whole banded
     * join). */
   private[graft] def mediaLibrary(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HexWords.register(spark)
+    GraftFunctions.registerAll(spark)
     val g = Tables.spread(Tables.documents(spark, dir)).withColumn("h", videoHex)
       .select(col("doc_id"), gridFromHex(col("h")).as("grid"))
     g.select(col("doc_id").as("media_id"), col("grid"))
@@ -423,7 +423,7 @@ object Multimodal {
   /** The kernel over any (media_id, grid) frame — specs plant perturbed
     * payload pairs here that exact digest dedup provably misses. */
   private[graft] def mediaNearDedupFrom(lib: DataFrame): DataFrame = {
-    graft.functions.DhashBits.register(lib.sparkSession)
+    GraftFunctions.registerAll(lib.sparkSession)
     Dedup.bandedHammingPairs(
       lib.select(col("media_id").as("doc_id"), dhashCol(col("grid")).as("phash")),
       "phash")
@@ -565,7 +565,7 @@ object Multimodal {
     * id scheme as [[mediaLibrary]]; same [[Tables.spread]] guard — the
     * banded self-join must not serialize on a single-split scan). */
   private[graft] def audioLibrary(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HexWords.register(spark)
+    GraftFunctions.registerAll(spark)
     val s = Tables.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), audioSamples(audioFpHex).as("sm"))
     s.select(col("doc_id").as("media_id"), col("sm"))
@@ -579,8 +579,7 @@ object Multimodal {
     * the same thing (≤ [[Dedup.HamMax]] of 60 gradient bits) for both
     * payload kinds. */
   private[graft] def audioNearDedupFrom(lib: DataFrame): DataFrame = {
-    graft.functions.DhashBits.register(lib.sparkSession)
-    graft.functions.MovingEnergy.register(lib.sparkSession)
+    GraftFunctions.registerAll(lib.sparkSession)
     Dedup.bandedHammingPairs(
       lib.select(col("media_id").as("doc_id"),
         dhashCol(audioEnvelope(col("sm"))).as("afp")),

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftFunctions, Tables}
 import graft.RunScope.ScratchCacheOps
 
 /** An in-engine TRAINED quality classifier — logistic regression fit by
@@ -75,7 +75,7 @@ object QualityLr {
     * [[graft.streaming.DocStream.streamingModelGate]] rides this).
     * Factored so the spec can plant a linearly separable fixture. */
   private[graft] def withFeatures(docs: DataFrame): DataFrame = {
-    graft.functions.RegexCount.register(docs.sparkSession)
+    GraftFunctions.registerAll(docs.sparkSession)
     val nTok = TextAnalysis.wsTokenCount(col("text"))
     val nStop = TextAnalysis.regexCount(col("text"), TextAnalysis.StopRe)
     val nPunct = TextAnalysis.regexCount(col("text"), "[.,!?;:]")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftFunctions, Tables}
 import graft.RunScope.ScratchCacheOps
 
 /** Corpus-selection operators for training-data preparation (beyond-
@@ -86,7 +86,7 @@ object Sampling {
     * partition count — the ordering is total ((n_chars, doc_id) has no
     * ties) — pinned by SamplingSpec. */
   def tokenBudgetSelect(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"),
@@ -154,7 +154,7 @@ object Sampling {
     * any corpus size, and the assignment is invariant to the partition
     * count (pinned by SamplingSpec alongside the token-budget entry). */
   def packSequences(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"))
@@ -445,7 +445,7 @@ object Sampling {
     * of the corpus total for the share — the whole report costs one
     * shuffle of per-source counter rows at any corpus size. */
   def sourceMixReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     val d = Tables.documents(spark, dir)
       .select(col("source"), col("lang"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"))
@@ -622,7 +622,7 @@ object Sampling {
     * 100 TB corpus costs exactly one scan, and the scan itself prunes to
     * (lang, text). */
   def epochMixPlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     val d = Tables.documents(spark, dir).select(col("lang"),
       TextAnalysis.wsTokenCount(col("text")).cast("long").as("tk"))
     val perLang = d.groupBy("lang")
@@ -734,7 +734,7 @@ object Sampling {
     * across engines; all emitted ratios round to 6/4 dp, the same
     * guard the rest of the mix family uses. */
   def temperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     val d = Tables.documents(spark, dir).select(col("lang"),
       TextAnalysis.wsTokenCount(col("text")).cast("long").as("tk"))
     val perLang = d.groupBy("lang")

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-import graft.functions.{CosineSimilarity, DotProduct, SquaredL2}
+import graft.{GraftFunctions, Tables}
 import graft.sources.Layout
 import graft.RunScope.ScratchCacheOps
 import graft.Tables.SizedSpreadOps
@@ -33,12 +32,12 @@ object Similarity {
 
   /** Brute-force cosine top-k (k=10) for the query set vec_id < 5: the
     * exact baseline every ANN variant is measured against. Cosine runs on
-    * the native codegen'd [[CosineSimilarity]] kernel — bit-identical to
+    * the native codegen'd [[graft.functions.CosineSimilarity]] kernel — bit-identical to
     * the HOF fold (same double widening, same ascending-order sum; pinned
     * by SimilaritySpec's kernel-parity test), so the oracle contract is
     * unchanged while the whole pair stream stays inside codegen. */
   def embeddingTopk(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -84,7 +83,7 @@ object Similarity {
     * join stage compiled where the HOF formulation would interpret three
     * lambda folds per pair. */
   def embeddingKnnNative(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
     // The embeddings parquet is a couple of splits; a broadcast nested-loop
     // join runs one task per STREAM-side partition, so without this the
@@ -146,7 +145,7 @@ object Similarity {
     * factored so specs can pin individual predictions against a
     * driver-side model. */
   private[graft] def knnPredictions(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
     // spread the stream side: see embeddingKnnNative (one task per
     // stream partition under a broadcast nested-loop join otherwise)
@@ -245,16 +244,16 @@ object Similarity {
     projSqlW(planeWeights(p), elem)
 
   /** The same signed projection on the Spark side, as ONE native codegen'd
-    * [[DotProduct]] node against a constant ±1 weight array — instead of a
-    * 64-node `element_at` sum per plane. The textual-sum form blew past
+    * [[graft.functions.DotProduct]] node against a constant ±1 weight
+    * array — instead of a 64-node `element_at` sum per plane. The textual-sum form blew past
     * Janino's method limits on the multi-table dedup path (8 tables × 6
     * planes, duplicated across both sides of the bucket self-join → a
     * ~13.7k-line compile unit that failed with InternalCompilerException
     * and ran interpreted at 22-29 s per execution at sf0.1); one loop node
     * per plane compiles cleanly. Bit-identical to the oracle's textual sum:
     * both accumulate doubles in ascending element order and ±1.0 multiplies
-    * are exact (see [[DotProduct]] scaladoc). Requires
-    * `DotProduct.register` on the session. */
+    * are exact (see [[graft.functions.DotProduct]] scaladoc). Requires
+    * `GraftFunctions.registerAll` on the session. */
   private def projDotExpr(weights: Seq[Int]): org.apache.spark.sql.Column =
     expr(s"dot_product(ed, array(${weights.map(w => s"${w.toDouble}D").mkString(",")}))")
 
@@ -268,8 +267,7 @@ object Similarity {
     * norms inside its single compiled loop, which also lets the bucket
     * join shuffle (vec_id, ed, bucket) without a precomputed-norm column. */
   def embeddingAnnLsh(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    DotProduct.register(spark)
+    GraftFunctions.registerAll(spark)
     // spread: bucket codes are 8 dot products per row — a single-split
     // scan would serialize them (identity at real scale, see Tables.spread)
     val e = Tables.spread(Tables.embeddings(spark, dir))
@@ -301,7 +299,7 @@ object Similarity {
     * (at that similarity the bucket-collision probability is high, which
     * it is not at 0.45 — hence the exact path here). */
   def embeddingCosineDedup(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
     val a = e.select(col("vec_id").as("doc_a"), col("embedding").as("ea"))
       .repartition(spark.sessionState.conf.numShufflePartitions)
@@ -388,10 +386,11 @@ object Similarity {
     * confirmation, `ed` re-attached to surviving candidates from the
     * cached vector frame — was implemented and measured 5× SLOWER at
     * the 25× organic rehearsal (125k vectors: wide 31.3 s payload vs
-    * 161.0 s slim, in-JVM alternated A/B, LshAbProfile). Mechanism: the
-    * candidate stream is the QUADRATIC term (n²·tables/2^planes random
-    * collisions ≈ 7×10⁸ pairs at 125k vectors) while the band rows are
-    * the LINEAR term (n·tables = 1.5M); the slim shape must shuffle the
+    * 161.0 s slim, in-JVM alternated A/B, LshAbProfile @ 2e9473a).
+    * Mechanism: the candidate stream is the QUADRATIC term
+    * (n²·tables/2^planes random collisions ≈ 7×10⁸ pairs at 125k
+    * vectors) while the band rows are the LINEAR term (n·tables =
+    * 1.5M); the slim shape must shuffle the
     * quadratic stream (pair dedup + two re-attach joins) where this
     * shape confirms cosine MAP-SIDE inside the bucket join stage and
     * shuffles only the ~output-sized survivors. "Candidates ≪ band
@@ -415,8 +414,7 @@ object Similarity {
     * Reverted; do not re-try either shape without new evidence. */
   private def lshDedupKernel(e: DataFrame, tables: Int, planes: Int,
                              weights: Seq[Seq[Seq[Int]]]): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
-    DotProduct.register(e.sparkSession)
+    GraftFunctions.registerAll(e.sparkSession)
     val tb = explode(array((0 until tables).map { t =>
       val code = (0 until planes).map { p =>
         when(projDotExpr(weights(t)(p)) > 0, lit(1L << p)).otherwise(lit(0L))
@@ -590,7 +588,7 @@ object Similarity {
       cents: IndexedSeq[(Long, Seq[Double])]): DataFrame = {
     require(cents.nonEmpty,
       "argmax cell assignment requires a non-empty centroid model")
-    graft.functions.ArgmaxCell.register(e.sparkSession)
+    GraftFunctions.registerAll(e.sparkSession)
     val sorted = cents.sortBy(_._1)
     e.select(col("vec_id"), col("ed"),
       call_function("argmax_cell", col("ed"),
@@ -606,7 +604,7 @@ object Similarity {
     * native kernel lifts. */
   private[llm] def argmaxCellChain(e: DataFrame,
       cents: IndexedSeq[(Long, Seq[Double])]): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
+    GraftFunctions.registerAll(e.sparkSession)
     // one struct(csim, -cent_id) COLUMN per centroid, each a direct
     // call into the native codegen'd kernel against a constant-folded
     // 64-double array literal — NOT a SQL higher-order function, which
@@ -689,7 +687,7 @@ object Similarity {
     * broadcast); the search never touches vectors outside the probed
     * cells — candidates shrink from n to ~n·nprobe/K. */
   def embeddingAnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     // the vector table feeds training (once per Lloyd iteration), cell
     // assignment, and the candidate join — cache it once
     val e = Tables.embeddings(spark, dir)
@@ -865,7 +863,7 @@ object Similarity {
     * other; the entries are single-driver by design (the driver gate and
     * bench run serially). */
   def ivfIndexSearch(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     // ---- index build: once per corpus, not per query ----
     Layout.dropManagedTable(spark, "graft_ivf_centroids")
     Layout.dropManagedTable(spark, "graft_ivf_assign")
@@ -934,8 +932,7 @@ object Similarity {
     * exchange-free search; and the fixed name makes the entry
     * single-driver by design. */
   def lshIndexSearch(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    DotProduct.register(spark)
+    GraftFunctions.registerAll(spark)
     // ---- index build ----
     Layout.dropManagedTable(spark, "graft_lsh_buckets")
     val e = Tables.embeddings(spark, dir)
@@ -1298,7 +1295,7 @@ object Similarity {
       .select(col("m"), col("vec_id").as("cent_id"), col("sub").as("ced"))
 
   private[llm] def trainPqCodebooks(e: DataFrame): DataFrame = {
-    SquaredL2.register(e.sparkSession)
+    GraftFunctions.registerAll(e.sparkSession)
     val subs = pqSubvectors(e).scratchCache()
     var cents = seedPqCodebooks(e)
     for (_ <- 1 to PqIters) {
@@ -1360,7 +1357,7 @@ object Similarity {
   /** Long-form codes — (vec_id, m, code, d2): each vector's per-subspace
     * codebook assignment. The storage row [[embeddingAdcSearch]] scans. */
   private[llm] def pqCodesLong(e: DataFrame, cents: DataFrame): DataFrame = {
-    SquaredL2.register(e.sparkSession)
+    GraftFunctions.registerAll(e.sparkSession)
     pqSubvectors(e).join(broadcast(cents), Seq("m"))
       .withColumn("d2", expr(l2Sql("sub", "ced")))
       .groupBy("vec_id", "m")
@@ -1480,7 +1477,7 @@ object Similarity {
     * shared by the entry and the planted-fixture recall spec. */
   private[llm] def adcSearchFrom(e: DataFrame, cents: DataFrame,
       qLo: Long, qHi: Long): DataFrame = {
-    SquaredL2.register(e.sparkSession)
+    GraftFunctions.registerAll(e.sparkSession)
     val codes = pqCodesLong(e, cents)
       .select(col("vec_id").as("c_id"), col("m"), col("code"))
     val dtab = pqSubvectors(e.filter(col("vec_id") >= qLo && col("vec_id") < qHi))
@@ -1544,7 +1541,7 @@ object Similarity {
     * broadcast |Q|·M·K lookup table — output-sized work, zero float I/O
     * for candidates. */
   def embeddingIvfAdcSearch(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed")
@@ -1562,7 +1559,7 @@ object Similarity {
     * [[embeddingIvfAdcSearch]] and [[annRecallReport]]. */
   private[llm] def ivfAdcFrom(e: DataFrame, ivfCents: DataFrame,
       pqCents: DataFrame, qLo: Long, qHi: Long): DataFrame = {
-    SquaredL2.register(e.sparkSession)
+    GraftFunctions.registerAll(e.sparkSession)
     val cand = ivfCandidatesFrom(e, ivfCents, qLo, qHi)
     val codes = pqCodesLong(e, pqCents)
       .select(col("vec_id").as("c_id"), col("m"), col("code"))
@@ -1660,7 +1657,7 @@ object Similarity {
     * ([[ivfSearchFrom]], [[ivfAdcFrom]]) and the session-scoped model
     * artifacts, so the report measures the deployed paths, not copies. */
   def annRecallReport(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed")
@@ -1856,7 +1853,7 @@ object Similarity {
     * corpus's 0.45 demo threshold. K stays the compile-time [[IvfK]]
     * here so the oracle mirrors the exact centroid chain. */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed")
@@ -1910,7 +1907,7 @@ object Similarity {
     * oracle unrolls at the same K — then runs the same within-cell
     * candidate + exact-confirm kernel. */
   def semanticDedupK64(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed")
@@ -1957,7 +1954,7 @@ object Similarity {
     * POLICY, not a K constant: re-verified at sf0.01 (K=20) and sf0.1
     * (K=80), the gate itself proves K moves with corpus size. */
   def semanticDedupAuto(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed")
@@ -1983,7 +1980,7 @@ object Similarity {
     * you estimate recall from a probe sample, you never compute the
     * full truth). Emits ONE row (n_true, n_found, recall). */
   def semanticDedupRecall(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed")
@@ -2045,7 +2042,7 @@ object Similarity {
     * list is near-dup-sized, so the anti-join broadcasts under AQE and
     * the corpus streams map-only. */
   def semanticDedupApply(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed")

@@ -3,10 +3,9 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftFunctions, Tables}
 import graft.analytics.Quantiles
 import graft.RunScope.ScratchCacheOps
-import graft.functions.RegexCount
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
   * the `documents` corpus table (beyond-reference surface; builder brief +
@@ -61,7 +60,7 @@ object TextAnalysis {
     regexCount(trim(s), "\\s+") + lit(1)
 
   private[graft] def withQualityScore(d: DataFrame): DataFrame = {
-    RegexCount.register(d.sparkSession)
+    GraftFunctions.registerAll(d.sparkSession)
     val nTok = wsTokenCount(col("text"))
     val nStop = regexCount(col("text"), StopRe)
     val nPunct = regexCount(col("text"), "[.,!?;:]")
@@ -178,7 +177,7 @@ object TextAnalysis {
     // spread: per-doc regex/hash work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
-    RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     def hits(re: String) = regexCount(lower(col("text")), re)
     val cEn = hits("\\b(the|and|of|to|a|in|is)\\b")
     val cDe = hits("\\b(der|die|das|und|ist|nicht)\\b")
@@ -323,7 +322,7 @@ object TextAnalysis {
     * split-on-empty emits a trailing "" (Java regex, limit -1) that
     * DuckDB's does not. */
   def docFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
+    GraftFunctions.registerAll(spark)
     // spread: per-doc regex/hash work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
@@ -605,7 +604,7 @@ object TextAnalysis {
     * into k-counter summaries and the shuffle ships summaries, never the
     * term stream. */
   def heavyHittersCheck(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.MisraGries.register(spark)
+    GraftFunctions.registerAll(spark)
     // spread: per-doc split/explode work serializes on a single-split
     // scan (identity at real scale, see Tables.spread)
     val ex = Tables.spread(Tables.documents(spark, dir))
@@ -739,7 +738,7 @@ object TextAnalysis {
     * regex below it — per element; see the expression's scaladoc.) */
   private[llm] def withTermCounts(df: DataFrame, arrCol: String,
       out: String): DataFrame = {
-    graft.functions.TermCounts.register(df.sparkSession)
+    GraftFunctions.registerAll(df.sparkSession)
     df.withColumn(out, expr(s"term_counts($arrCol)"))
   }
 
@@ -895,7 +894,7 @@ object TextAnalysis {
     * fast-paths already-normalized text with a no-allocation check, so
     * ASCII corpora pay a scan, not a rewrite). */
   def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfcNormalize.register(spark)
+    GraftFunctions.registerAll(spark)
     // spread: per-doc normalize/regex work serializes on a single-split
     // scan (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
@@ -1527,7 +1526,7 @@ object TextAnalysis {
     // spread: per-doc regex work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
-    RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     val raw = when(col("doc_id") % 4 === 1,
         concat(col("text"), lit(" contact user"), col("doc_id"), lit("@example.com")))
       .when(col("doc_id") % 4 === 2,
@@ -1850,7 +1849,7 @@ object TextAnalysis {
     * character — ~100e12 rows corpus-wide). The whole query is a
     * map-only scan-project; the only ordering is presentation. */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CharEntropy.register(spark)
+    GraftFunctions.registerAll(spark)
     // spread: per-doc entropy work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     Tables.spread(Tables.documents(spark, dir))
@@ -1912,8 +1911,8 @@ object TextAnalysis {
     // aggregating the vocabulary²-bounded lm2 replaces a SECOND
     // full-corpus tokenize+explode+shuffle(w1) pass with a shuffle of
     // the LM table — the w1 exchange's input drops from bigram
-    // OCCURRENCES to distinct bigrams. Local A/B (LmAbProfile, 5×/25×
-    // organic): wall-clock FLAT (min −2%/+2%, mixed signs — at these
+    // OCCURRENCES to distinct bigrams. Local A/B (LmAbProfile @ 2e9473a,
+    // 5×/25× organic): wall-clock FLAT (min −2%/+2%, mixed signs — at these
     // sizes the old lm1 pass ran concurrently on idle cores, so less
     // total work trades against a longer critical path); shipped for
     // the at-scale shape, where the removed pass is corpus-sized. The
@@ -2015,8 +2014,8 @@ object TextAnalysis {
     val lm2 = ref.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     // Deliberately NOT derived from lm2 (c(w1·) = Σ_w2 c(w1,w2), the
     // bigramSurprisal r22 rewrite): the in-JVM alternated A/B
-    // (LmAbProfile) measured the derived form consistently SLOWER here —
-    // 25× organic min 3.58 s → 4.03 s (+12%), same sign every rep, and
+    // (LmAbProfile @ 2e9473a) measured the derived form consistently
+    // SLOWER here — 25× organic min 3.58 s → 4.03 s (+12%), same sign every rep, and
     // +2% at 5×. Unlike bigramSurprisal, this lm1 aggregates only the
     // REFERENCE-filtered slice (a small fraction of the stream by
     // design), so the pass it would remove is cheap, while deriving

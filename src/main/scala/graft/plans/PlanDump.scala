@@ -4,20 +4,20 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
-/** Diagnostic main (not a test — lives next to Bench/Verify/LintDebug):
+/** Diagnostic main (not a test — lives next to Bench/Verify; its former
+  * sibling LintDebug @ 2e9473a is superseded by RegistryPlanLintSpec):
   * writes `.explain("formatted")` for registry entries to files, so the
   * optimization rounds can commit before/after plan evidence
   * (plans/rN/<entry>_before.txt) without hand-copying console output.
   *
   * Usage: `runMain graft.plans.PlanDump <sfDir> <outDir> [entry ...]` —
-  * with no entry names, dumps the whole registry. Session config mirrors
-  * Bench (same master/shuffle-partitions/codegen knobs) so the dumped
-  * plan is the one the bench actually runs; entries whose CONSTRUCTION
+  * with no entry names, dumps the whole registry. The session is
+  * [[GraftSession]]'s, as in Bench, so the dumped plan is the one the
+  * bench actually runs; entries whose CONSTRUCTION
   * runs jobs (iterative trainers, CTAS-style layouts) pay that cost here
   * exactly as Bench does, but nothing is executed beyond construction.
   */
@@ -29,13 +29,7 @@ object PlanDump {
     val outDir = Paths.get(args(1))
     Files.createDirectories(outDir)
     val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.maxFields", "256")
+    val spark = GraftSession.builder(GraftSession.cpus)
       .appName("plan-dump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val mode = ExplainMode.fromString("formatted")

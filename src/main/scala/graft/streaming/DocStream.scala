@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.GraftFunctions
 import graft.llm.{Dedup, Sampling, TextAnalysis}
 
 /** Streaming document kernels — the online forms of the near-dup
@@ -102,7 +103,7 @@ object DocStream {
     * shingle stage + the native per-row fingerprint; drops sub-3-word
     * docs exactly as batch does. */
   private[graft] def fingerprints(docs: DataFrame): DataFrame = {
-    graft.functions.SimHashWord.register(docs.sparkSession)
+    GraftFunctions.registerAll(docs.sparkSession)
     Dedup.shinglesOf(docs)
       .withColumn("simhash", expr("simhash_word(shingles, 0)"))
       .drop("ws", "shingles", "text")
@@ -169,7 +170,7 @@ object DocStream {
     * upstream at ingest, exactly where the batch library builds it. */
   def streamingMediaDedup(media: DataFrame,
                           horizon: String = "30 MINUTES"): DataFrame = {
-    graft.functions.DhashBits.register(media.sparkSession)
+    GraftFunctions.registerAll(media.sparkSession)
     bandedPairStream(
       media.select(col("media_id").as("id"), col("ts"),
         graft.llm.Multimodal.dhashCol(col("grid")).as("fp")),
@@ -204,7 +205,7 @@ object DocStream {
     * Input schema: (media_id long, ts timestamp, grid array<int>);
     * `library` is a static (media_id, grid) frame. Append-mode. */
   def streamingMediaGate(media: DataFrame, library: DataFrame): DataFrame = {
-    graft.functions.DhashBits.register(media.sparkSession)
+    GraftFunctions.registerAll(media.sparkSession)
     // The static side is CACHED (r21, ADVICE r20 #4): a stream-static
     // join re-plans and re-executes its static subtree every micro-batch,
     // so an uncached library would re-decode and re-fingerprint the whole
@@ -247,8 +248,7 @@ object DocStream {
     * where the batch library decodes them); `library` is a static
     * (media_id, sm) frame. Append-mode. */
   def streamingAudioGate(audio: DataFrame, library: DataFrame): DataFrame = {
-    graft.functions.DhashBits.register(audio.sparkSession)
-    graft.functions.MovingEnergy.register(audio.sparkSession)
+    GraftFunctions.registerAll(audio.sparkSession)
     def afp(sm: org.apache.spark.sql.Column) =
       graft.llm.Multimodal.dhashCol(graft.llm.Multimodal.audioEnvelope(sm))
     // cached for the same per-micro-batch reason as [[streamingMediaGate]];
@@ -306,7 +306,7 @@ object DocStream {
 
   /** (doc_id, ts, sim1, sim2) — both 60-bit md5 words per document. */
   private[graft] def fingerprintsWide(docs: DataFrame): DataFrame = {
-    graft.functions.SimHashWord.register(docs.sparkSession)
+    GraftFunctions.registerAll(docs.sparkSession)
     Dedup.shinglesOf(docs)
       .withColumn("sim1", expr("simhash_word(shingles, 0)"))
       .withColumn("sim2", expr("simhash_word(shingles, 1)"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.Tables
+import graft.{GraftFunctions, Tables}
 
 /** Open-session accumulator for the sessionizer (top-level so the state
   * encoder's generated code can construct it). */
@@ -1077,7 +1077,7 @@ object EventsStream {
     * passes (Append mode). The same expression drives the batch entry
     * (`heavy_hitters_check`), so stream and batch share one kernel. */
   def streamingHeavyHitters(events: DataFrame, k: Int = 4): DataFrame = {
-    graft.functions.MisraGries.register(events.sparkSession)
+    GraftFunctions.registerAll(events.sparkSession)
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"))

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * session whose only wiring is the `GraftExtensions` class — the
   * shared-cluster deployment shape (one `spark.sql.extensions` config
   * line, every job gets the native functions and the optimizer rule).
-  * The kernels' embedded `register(spark)` calls are idempotent today;
-  * this pin prevents a future kernel from silently depending on a manual
+  * The kernels' embedded `GraftFunctions.registerAll` calls are
+  * idempotent; this pin prevents a future kernel from silently depending on a manual
   * register call that an extensions-configured production session would
   * never make, or on registration order across entries. Physical
   * planning (sparkPlan) is forced so function resolution, the injected
@@ -33,7 +33,7 @@ class ExtensionsSmokeSpec extends AnyFunSuite {
       // a genuinely NEW SparkSession over the same context — its function
       // registry starts fresh (built-ins only), then GraftExtensions
       // itself injects the natives + the optimizer rule
-      val ext = SparkSpec.configure(SparkSession.builder())
+      val ext = GraftSession.builder(SparkSpec.cpus)
         .withExtensions(new GraftExtensions())
         .getOrCreate()
       assert(ext ne base, "must be a fresh session, not the shared fixture")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("GraftExtensions injects all native functions into a fresh session") {
-    // Build a DEDICATED session so the extension path (not a register()
+    // Build a DEDICATED session so the extension path (not a registerAll
     // call) provides the functions. getOrCreate() returns the suite's
     // shared session if one is active — clear the bindings first, and
     // restore them after instead of stop(): the new session shares the
@@ -22,12 +22,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[4]")
+      val s = GraftSession.builder(SparkSpec.cpus)
         .withExtensions(new GraftExtensions)
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       s.sparkContext.setLogLevel("ERROR")
       val r = s.sql(
@@ -75,11 +71,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[4]")
+      val s = GraftSession.builder(SparkSpec.cpus)
         .withExtensions(new GraftExtensions)
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       s.sparkContext.setLogLevel("ERROR")
       // non-literal input (range) so constant folding cannot pre-collapse

@@ -28,6 +28,16 @@ class OutputSchemaSpec extends SparkSpec {
     case _ => Nil
   }
 
+  test("the registry lists 245 distinct names and both driver maps cover exactly them") {
+    // a name listed twice would silently collapse in the Map views
+    val names = SparkEntry.entries.map(_.name)
+    assert(names.size == 245, s"${names.size} entries")
+    assert(names.distinct.size == names.size,
+      s"duplicated: ${names.diff(names.distinct).mkString(",")}")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+  }
+
   test("no registered query emits DecimalType at the output edge") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>

@@ -17,18 +17,14 @@ object SparkSpec {
   val sfDir = "/root/testdata/sf0.001"
   val gateDir = "/root/testdata/sf0.01"
 
-  /** The fixture's session settings, factored so specs that must build
-    * their OWN session (ExtensionsSmokeSpec) cannot silently diverge
-    * from the shared fixture's configuration. */
-  def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  /** The fixture's core count, fixed so partition-dependent specs do not
+    * vary with the host; specs that build their OWN session pass it to
+    * [[GraftSession.builder]] too. */
+  val cpus = 4
 
   // One session per JVM (forked test run) — specs share it.
   lazy val session: SparkSession = {
-    val s = configure(SparkSession.builder()).getOrCreate()
+    val s = GraftSession.builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 class CappedStructListSpec extends SparkSpec {
 
@@ -25,7 +25,7 @@ class CappedStructListSpec extends SparkSpec {
   }
 
   test("capped_list equals the two-pass anti-join + collect_list form") {
-    CappedStructList.register(spark)
+    GraftFunctions.registerAll(spark)
     for (parts <- Seq(1, 3, 16); cap <- Seq(1, 4, 5, 8)) {
       val df = fixture(parts)
       val got = df.groupBy("s")
@@ -41,7 +41,7 @@ class CappedStructListSpec extends SparkSpec {
 
   test("hot groups evaluate to NULL and exactly-at-cap groups survive whole") {
     import spark.implicits._
-    CappedStructList.register(spark)
+    GraftFunctions.registerAll(spark)
     val out = fixture(8).groupBy("s")
       .agg(expr("capped_list(named_struct('doc_id', doc_id, 'n', n), 5)").as("ds0"))
       .select(col("s"), col("ds0"))

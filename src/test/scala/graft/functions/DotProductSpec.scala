@@ -2,12 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftFunctions, SparkSpec, Tables}
 
 class DotProductSpec extends SparkSpec {
 
   test("native DotProduct equals the HOF zip_with fold bit-for-bit (float + double)") {
-    DotProduct.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, sfDir).limit(40)
     val a = e.select(col("vec_id").as("qa"), col("embedding").as("fa"))
       .withColumn("da", col("fa").cast("array<double>"))
@@ -33,7 +33,7 @@ class DotProductSpec extends SparkSpec {
     // the oracle spells projections as (+ ed[1] - ed[2] ...): left-to-right
     // double accumulation with exact ±1 multiplies — must be the identical
     // double to the kernel's ascending fold
-    DotProduct.register(spark)
+    GraftFunctions.registerAll(spark)
     val w = (0 until 64).map(d => if (d % 3 == 0) 1 else -1)
     val textual = expr(w.zipWithIndex.map { case (s, d) =>
       s"${if (s > 0) "+" else "-"} element_at(ed, ${d + 1})"
@@ -48,7 +48,7 @@ class DotProductSpec extends SparkSpec {
 
   test("null array element poisons the product (eval + codegen paths)") {
     import spark.implicits._
-    DotProduct.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = Seq(
       (1L, Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](3.0, 4.0)),
       (2L, Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](3.0, 4.0)))
@@ -61,7 +61,7 @@ class DotProductSpec extends SparkSpec {
 
   test("mismatched lengths yield NULL, matching the zip_with pad-with-null fold") {
     import spark.implicits._
-    DotProduct.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = Seq(
       (1L, Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0)), // longer left
       (2L, Seq(1.0), Seq(4.0, 5.0)), // longer right

@@ -3,12 +3,12 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 class NfcNormalizeSpec extends SparkSpec {
 
   test("nfc_normalize composes decomposed sequences and singleton forms") {
-    NfcNormalize.register(spark)
+    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val rows = Seq(
       "Cafe\u0301",  // e + COMBINING ACUTE -> precomposed e-acute
@@ -25,7 +25,7 @@ class NfcNormalizeSpec extends SparkSpec {
   }
 
   test("interpreted eval, codegen, and the static kernel agree; nulls pass through") {
-    NfcNormalize.register(spark)
+    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val inputs = Seq("Cafe\u0301 \u212B", "plain", "", "\ud83d\ude00 e\u0301")
     // kernel directly

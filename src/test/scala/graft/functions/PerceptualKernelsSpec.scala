@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 /** Pins the r22 §11 native perceptual kernels — `hex_words`,
   * `dhash_bits`, `moving_energy` — against the interpreted
@@ -15,9 +15,7 @@ import graft.SparkSpec
 class PerceptualKernelsSpec extends SparkSpec {
 
   private def registerAll(): Unit = {
-    HexWords.register(spark)
-    DhashBits.register(spark)
-    MovingEnergy.register(spark)
+    GraftFunctions.registerAll(spark)
   }
 
   /** The pre-r22 HOF formulations, verbatim. */

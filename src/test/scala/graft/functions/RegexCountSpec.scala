@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 /** Pins `regex_count` — the counting-only replacement for
   * `size(regexp_extract_all(s, re, 0))` (r22 §10) — against the original
@@ -50,7 +50,7 @@ class RegexCountSpec extends SparkSpec {
     graft.Tables.documents(spark, sfDir).select(col("text").as("s"))
 
   test("regex_count == size(regexp_extract_all) for every used pattern") {
-    RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     for (df <- Seq(strFrame(Adversarial), corpusTexts); re <- UsedPatterns) {
       val bad = df.select(
           graft.llm.TextAnalysis.regexCount(col("s"), re).as("fast"),
@@ -61,7 +61,7 @@ class RegexCountSpec extends SparkSpec {
   }
 
   test("wsTokenCount == size(split(trim(s), \\s+)) — the +1 split identity") {
-    RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     for (df <- Seq(strFrame(Adversarial), corpusTexts)) {
       val bad = df.select(
           graft.llm.TextAnalysis.wsTokenCount(col("s")).as("fast"),
@@ -72,7 +72,7 @@ class RegexCountSpec extends SparkSpec {
   }
 
   test("length - regex_count(\\s) == length(regexp_replace(s, \\s+, ''))") {
-    RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     for (df <- Seq(strFrame(Adversarial), corpusTexts)) {
       val bad = df.select(
           (length(col("s")) - graft.llm.TextAnalysis.regexCount(col("s"), "\\s"))
@@ -84,7 +84,7 @@ class RegexCountSpec extends SparkSpec {
   }
 
   test("zero-width-capable and non-foldable patterns keep extract_all parity") {
-    RegexCount.register(spark)
+    GraftFunctions.registerAll(spark)
     import spark.implicits._
     // "a*" can match empty at every position — parity must hold because
     // both sides run the identical Matcher.find() advancement loop

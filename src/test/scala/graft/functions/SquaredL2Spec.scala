@@ -2,12 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftFunctions, SparkSpec, Tables}
 
 class SquaredL2Spec extends SparkSpec {
 
   test("native SquaredL2 equals the HOF zip_with fold bit-for-bit (float + double)") {
-    SquaredL2.register(spark)
+    GraftFunctions.registerAll(spark)
     val e = Tables.embeddings(spark, sfDir).limit(40)
     val a = e.select(col("vec_id").as("qa"), col("embedding").as("fa"))
       .withColumn("da", col("fa").cast("array<double>"))
@@ -32,7 +32,7 @@ class SquaredL2Spec extends SparkSpec {
 
   test("identity distance is exactly zero; null element and length mismatch yield NULL") {
     import spark.implicits._
-    SquaredL2.register(spark)
+    GraftFunctions.registerAll(spark)
     val self = Tables.embeddings(spark, sfDir).limit(20)
       .select(expr("squared_l2(embedding, embedding)").as("d"))
     assert(self.filter(col("d") =!= 0.0).isEmpty, "d(x,x) must be exactly 0")

@@ -2,12 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftFunctions, SparkSpec, Tables}
 
 class TermCountsSpec extends SparkSpec {
 
   test("term_counts equals the exploded groupBy recount, corpus-wide") {
-    TermCounts.register(spark)
+    GraftFunctions.registerAll(spark)
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("toks"))
     val native = d
@@ -22,7 +22,7 @@ class TermCountsSpec extends SparkSpec {
   }
 
   test("terms are unique and ascending within each row") {
-    TermCounts.register(spark)
+    GraftFunctions.registerAll(spark)
     val bad = Tables.documents(spark, sfDir)
       .select(expr("term_counts(split(lower(trim(text)), '\\\\s+'))").as("tc"))
       .select(expr(
@@ -34,7 +34,7 @@ class TermCountsSpec extends SparkSpec {
   }
 
   test("edge cases: empty array, null elements skipped, null array is null") {
-    TermCounts.register(spark)
+    GraftFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT term_counts(CAST(array() AS ARRAY<STRING>)) AS empty,
         |       term_counts(array('b', NULL, 'a', 'b')) AS mixed,

@@ -29,6 +29,18 @@ class CorpusPrepSpec extends SparkSpec {
       "no fuzzy-contaminated doc may survive")
   }
 
+  test("gate stage is row-identical to the corpus pk-joined back to the scored frame") {
+    // the r21 gate shape the one-scan projection replaced
+    val ref = Tables.documents(spark, sfDir).select("doc_id", "text")
+      .join(TextAnalysis.qualityFrame(spark, sfDir)
+        .select("doc_id", "n_tokens", "quality_score"), "doc_id")
+      .filter(col("quality_score") >= TextAnalysis.LowQuality)
+    val got = CorpusPrep.stages(spark, sfDir).gated
+    assert(got.orderBy("doc_id").collect().toSeq ==
+      ref.orderBy("doc_id").collect().toSeq)
+    graft.RunScope.releaseAll()
+  }
+
   test("budget fill: prefix sums reconcile and the budget bounds admission") {
     import spark.implicits._
     val rows = selected

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftFunctions, SparkSpec, Tables}
 
 class DedupSpec extends SparkSpec {
 
@@ -44,7 +44,7 @@ class DedupSpec extends SparkSpec {
   test("native word-1 fingerprint matches the exploded vote aggregate, corpus-wide") {
     // word 0 is pinned in DocStreamSpec; this covers the wide kernel's
     // second md5 word through the same independent groupBy formulation.
-    graft.functions.SimHashWord.register(spark)
+    GraftFunctions.registerAll(spark)
     val sh = Dedup.shinglesOf(Tables.documents(spark, sfDir)).cache()
     val native = sh.select(col("doc_id"),
       expr("simhash_word(shingles, 1)").as("simhash"))
@@ -55,7 +55,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native minhash signature matches the exploded 64-buffer min aggregate, corpus-wide") {
-    graft.functions.MinHashSig.register(spark)
+    GraftFunctions.registerAll(spark)
     val sh = Dedup.shinglesOf(Tables.documents(spark, sfDir)).cache()
     val native = sh.select(col("doc_id"),
       expr("minhash_sig(shingles, 64)").as("sig"))

@@ -546,6 +546,33 @@ class TextAnalysisSpec extends SparkSpec {
     bs.unpersist()
   }
 
+  test("bigram surprisal with lm1 derived from lm2 equals the token-stream lm1 form") {
+    // the r21 kernel: prefix counts aggregated over the bigram stream
+    val toks = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("t"))
+    val pairs = toks.filter(size(col("t")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS w1, t[i] AS w2))"))
+        .as("bg"))
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+    val lm2 = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+    val lm1 = pairs.groupBy("w1").agg(count(lit(1)).as("c1"))
+    val vocab = toks.select(explode(col("t")).as("w"))
+      .agg(countDistinct(col("w")).as("v"))
+    val ref = pairs.join(lm2, Seq("w1", "w2")).join(lm1, Seq("w1"))
+      .crossJoin(broadcast(vocab))
+      .select(col("doc_id"),
+        round(-log2((col("c12") + lit(1.0)) / (col("c1") + col("v"))), 6)
+          .cast("decimal(18,6)").as("nll"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"),
+        (round(sum(col("nll")).cast("double") / count(lit(1)) * lit(1e6)) / lit(1e6))
+          .as("avg_nll"))
+      .orderBy("doc_id")
+    assert(TextAnalysis.bigramSurprisal(spark, sfDir).collect().toSeq ==
+      ref.collect().toSeq)
+  }
+
   test("top terms per lang: k rows per language, ordered, WindowGroupLimit planned") {
     val tt = TextAnalysis.topTermsPerLang(spark, sfDir).cache()
     val langs = Tables.documents(spark, sfDir).select("lang").distinct().count()

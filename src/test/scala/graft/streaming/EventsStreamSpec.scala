@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftFunctions, SparkSpec, Tables}
 
 class EventsStreamSpec extends SparkSpec {
 
@@ -684,7 +684,7 @@ class EventsStreamSpec extends SparkSpec {
         .select("event_type", "min_count").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       // batch twin: the same expression over the same rows
-      graft.functions.MisraGries.register(spark)
+      GraftFunctions.registerAll(spark)
       val want = rows.toDF("ts", "event_type", "value")
         .filter(col("ts") < ts("2024-01-01 11:00:00"))
         .agg(expr("misra_gries(event_type, 2)")).head()

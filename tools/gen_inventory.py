@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
 """Single-source-of-truth inventory generator + lint (VERDICT r14 #3).
 
-The operator registry lives in ONE place — `SparkEntry.queries` — and the
-human-facing coverage docs (README's two coverage tables, SURVEY §2.11's
-family pointers) must never drift from it. This script:
+The operator registry lives in ONE place — the `SparkEntry.entries` list
+of `Entry(name, build, oracleSql)` records, from which the driver's
+`queries` and `oracleSql` maps are derived — and the human-facing
+coverage docs (README's two coverage tables, SURVEY §2.11's family
+pointers) must never drift from it. This script:
 
- 1. parses the registry (entry name -> implementing `Object.method`) and
-    the oracle map from SparkEntry.scala;
+ 1. parses that list (entry name -> implementing `Object.method`) from
+    SparkEntry.scala;
  2. LINTS the hand-written README coverage tables: every backticked
     `entry` they cite must exist in the registry (stale rows fail), and
     every registry entry must be cited by at least one table row
@@ -156,18 +158,17 @@ def twin_section(queries):
     ])
     return gen, problems
 
-REG_RE = re.compile(r'"([a-z0-9_]+)" -> \(\(s, d\) => ([A-Za-z]+\.[A-Za-z0-9]+)\(s, d\)\)')
-ORACLE_RE = re.compile(r'"([a-z0-9_]+)" -> ([A-Za-z]+\.[A-Za-z0-9]+Sql|[A-Za-z]+\.[a-zA-Z0-9]+)\s*[,)]')
+ENTRY_RE = re.compile(
+    r'Entry\("([a-z0-9_]+)", ([A-Za-z]+\.[A-Za-z0-9]+)\(_, _\),\s*[A-Za-z]+\.[A-Za-z0-9]+\)')
 
 
 def parse_entry(path):
-    src = open(path).read()
-    # split at the oracleSql map so query registrations and oracle
-    # registrations parse independently
-    cut = src.index("def oracleSql")
-    queries = dict(REG_RE.findall(src[:cut]))
-    oracles = dict(ORACLE_RE.findall(src[cut:]))
-    return queries, oracles
+    """Entry name -> implementing `Object.method`, plus any name listed
+    twice (a Map view of the list would silently keep the last one)."""
+    pairs = ENTRY_RE.findall(open(path).read())
+    names = [n for n, _ in pairs]
+    dups = sorted({n for n in names if names.count(n) > 1})
+    return dict(pairs), dups
 
 
 def cited_entries(readme_src):
@@ -229,16 +230,10 @@ def second_scale_problems(queries):
 
 
 def main():
-    queries, oracles = parse_entry(ENTRY)
+    queries, dups = parse_entry(ENTRY)
     readme_src = open(README).read()
-    problems = []
+    problems = [f"registry entry `{n}` is listed more than once" for n in dups]
     problems.extend(second_scale_problems(queries))
-
-    # registry internal consistency: every query has an oracle
-    for n in sorted(set(queries) - set(oracles)):
-        problems.append(f"registry entry `{n}` has no oracleSql registration")
-    for n in sorted(set(oracles) - set(queries)):
-        problems.append(f"oracleSql entry `{n}` has no queries registration")
 
     # README lint — compare only names that LOOK like registry entries
     # (contain an underscore or are registry members) to skip incidental
@@ -258,8 +253,8 @@ def main():
         problems.append(f"registry entry `{n}` is cited by no README coverage row")
 
     # regenerate the machine-derived index
-    rows = [f"| `{n}` | `{queries[n]}` | {'yes' if n in oracles else 'NO'} |"
-            for n in sorted(queries)]
+    # every Entry carries its oracle SQL, so the Oracle column is always yes
+    rows = [f"| `{n}` | `{queries[n]}` | yes |" for n in sorted(queries)]
     gen = "\n".join([
         BEGIN,
         "",
