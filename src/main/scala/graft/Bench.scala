@@ -69,6 +69,8 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // first failure of each failed entry, in order — BENCH_OUT's "failures"
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     def exec(name: String): Double = {
       val t0 = System.nanoTime()
       val elapsed =
@@ -78,6 +80,7 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failures.getOrElseUpdate(name, e)
           -1.0
         }
       // entry-end cache hygiene (outside the timed region): run-scoped
@@ -250,8 +253,11 @@ object Bench {
     // an 8-core total as its "quiet" baseline — the record now carries
     // its core count and readQuiet rejects a mismatch like it rejects
     // an sf mismatch. The stdout line the driver parses is unchanged.
+    // schema_store: the session's Tables schema-store counters over the
+    // whole run, warm-up included (which caches hit, from the artifact)
+    val store = Tables.schemaStoreStats(spark)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(med, _.toString)},"sf":"$sfDir","cpus":$cpus,"mode":"warm","n_queries":${med.size},"reps":$reps$dg,"spread_sec":${jmap(spreads, _.toString)},"spread_rel":${jmap(relByName, r3)},"queries_min":${jmap(mins, _.toString)},"total_min":${mins.map(_._2).filter(_ >= 0).sum},"noise":$noise}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(med, _.toString)},"sf":"$sfDir","cpus":$cpus,"mode":"warm","n_queries":${med.size},"reps":$reps$dg,"spread_sec":${jmap(spreads, _.toString)},"spread_rel":${jmap(relByName, r3)},"queries_min":${jmap(mins, _.toString)},"total_min":${mins.map(_._2).filter(_ >= 0).sum},"noise":$noise,"schema_store":{"hits":${store.hits},"misses":${store.misses}},"failures":${failuresJson(failures.toSeq)}}"""
     try Files.writeString(Paths.get(out), full + "\n")
     catch { case _: Throwable => () }
     // Self-maintained quiet-canonical record: a NON-degraded full-suite
@@ -301,6 +307,19 @@ object Bench {
       } yield (v, n,
         """"recorded":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1)))
     } catch { case _: Throwable => None }
+
+  /** BENCH_OUT's `failures` field: `{name, class, message}` per failed
+    * entry (its first failure), so a missing timing is explained by the
+    * artifact instead of a stderr line. */
+  private[graft] def failuresJson(fs: Seq[(String, Throwable)]): String = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val arr = mapper.createArrayNode()
+    fs.foreach { case (n, e) =>
+      arr.addObject().put("name", n).put("class", e.getClass.getName)
+        .put("message", String.valueOf(e.getMessage))
+    }
+    mapper.writeValueAsString(arr)
+  }
 
   // Locale.ROOT: the f-interpolator delegates to the DEFAULT locale, so
   // under e.g. de_DE the decimal separator becomes ',' and the stdout

@@ -185,4 +185,21 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.passSpreadRelOf(Seq(4.0, 4.0, 4.0)) == 0.0)
     assert(Bench.passSpreadRelOf(Nil) == -1.0)
   }
+
+  test("BENCH_OUT failures: one forced failure is typed, named and valid JSON") {
+    val forced =
+      try { SparkEntry.queries("q1_ratio_rank")(null, "sf"); None }
+      catch { case e: Throwable => Some(e) }
+    val e = forced.getOrElse(fail("the forced failure did not throw"))
+    val quoted = new IllegalStateException("bad \"value\"\n\tat line 2\u0001")
+    val json = Bench.failuresJson(Seq("q1_ratio_rank" -> e, "other" -> quoted))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.isArray && tree.size == 2)
+    assert(tree.get(0).get("name").asText == "q1_ratio_rank")
+    assert(tree.get(0).get("class").asText == e.getClass.getName)
+    assert(tree.get(0).get("message").asText == String.valueOf(e.getMessage))
+    assert(tree.get(1).get("class").asText == "java.lang.IllegalStateException")
+    assert(tree.get(1).get("message").asText == quoted.getMessage)
+    assert(Bench.failuresJson(Nil) == "[]")
+  }
 }
